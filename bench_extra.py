@@ -117,10 +117,9 @@ def mode_stage(sf_dir: str) -> None:
         spark.sparkContext.setJobDescription("stage: link")
         stats: dict = {}
         entities = link_entities(mentions, cfg, stats=stats).cache()
-        n_alias = stats.get("n_surfaces") or entities.count()
         t2 = time.time()
         spark.sparkContext.setJobDescription("stage: triples")
-        linked = graph.link_mentions(mentions, entities, alias_count=n_alias)
+        linked = graph.link_mentions(mentions, entities, stats["n_surfaces"])
         triples = graph.build_triples(linked, entities)
         n_t = triples.count()
         t3 = time.time()

@@ -15,25 +15,28 @@ def doc_uri() -> "F.Column":
     return F.concat_ws("@", F.col("repo"), F.col("path"), F.col("commit"))
 
 
+# alias tables up to this many rows are broadcast to the mention join
+BROADCAST_THRESHOLD = 5_000_000
+
+
 def link_mentions(mentions: DataFrame, entities: DataFrame,
-                  broadcast_threshold: int = 5_000_000,
-                  alias_count: int | None = None) -> DataFrame:
+                  alias_count: int) -> DataFrame:
     """Attach canonical entity to each mention via the alias table.
+
+    `alias_count` is the alias-table row count (one row per distinct
+    surface), which canonicalize already reports as
+    stats["n_surfaces"], so sizing the join costs no job here.
 
     Size-adaptive join strategy: the alias table is vocabulary-sized for
     named entities but grows with the corpus for indicators (hashes, IPs
-    are near-unique). Below the threshold it broadcasts (no shuffle of
-    the corpus-scale mention table); above, the hint is dropped and
-    Catalyst/AQE pick a shuffle join — at that size the broadcast would
-    not fit executors anyway."""
+    are near-unique). Up to BROADCAST_THRESHOLD rows it broadcasts (no
+    shuffle of the corpus-scale mention table); above, the hint is
+    dropped and Catalyst/AQE pick a shuffle join — at that size the
+    broadcast would not fit executors anyway."""
     alias_tbl = entities.select(
         "etype", F.col("alias").alias("surface"), "canonical", "entity_id"
     )
-    # entities has exactly one row per distinct surface, so callers that
-    # already counted the surface vocabulary can pass it and skip a job
-    n = alias_count if alias_count is not None else alias_tbl.limit(
-        broadcast_threshold + 1).count()
-    if n <= broadcast_threshold:
+    if alias_count <= BROADCAST_THRESHOLD:
         alias_tbl = F.broadcast(alias_tbl)
     return mentions.join(alias_tbl, ["etype", "surface"], "left").withColumn(
         "canonical", F.coalesce("canonical", "surface")

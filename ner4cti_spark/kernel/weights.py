@@ -24,8 +24,9 @@ SEED = 42
 
 @dataclass(frozen=True)
 class KernelProfile:
-    """'reference' dims per arguments.py:121-136; 'fast' is the compact
-    CPU eval profile (same architecture, smaller widths)."""
+    """The kernel's dims: the reference flagship's architecture
+    (arguments.py:121-136) at compact CPU-eval widths; the `ref:`
+    comments give the reference's own widths."""
 
     word_vocab: int = 4096      # hashed vocab buckets (ref: 7129 fitted)
     word_dim: int = 50
@@ -48,9 +49,6 @@ class KernelProfile:
 
 
 FAST = KernelProfile()
-REFERENCE = KernelProfile(
-    word_vocab=8192, lstm_hidden=256, lstm_layers=4, n_heads=8
-)
 
 
 def build_weights(profile: KernelProfile = FAST, seed: int = SEED,

@@ -13,77 +13,67 @@ label-propagation loop (join+min-agg until fixpoint)".
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import collect_if_small
 
 
 DRIVER_THRESHOLD = 2_000_000
 
 
 def connected_components(edges: DataFrame, max_iter: int = 20,
-                         n_partitions: int = 8,
-                         driver_threshold: int = DRIVER_THRESHOLD,
-                         probe_rows: list | None = None) -> DataFrame:
+                         n_partitions: int = 8) -> DataFrame:
     """edges(src long, dst long) undirected → (node long, component long),
     component = min reachable node id. Deterministic.
 
     Physical strategy is size-adaptive, like AQE picking a broadcast
     join: alias graphs are vocabulary-sized (distinct linked surfaces),
-    orders of magnitude below corpus scale, so up to `driver_threshold`
-    edges they are collected and solved with driver union-find in
-    milliseconds — ~10 distributed rounds of shuffle latency buy nothing
-    there. Above the threshold the distributed min-label fixpoint with
-    pointer jumping runs (O(log diameter) rounds).
-
-    `probe_rows`: pre-collected `edges.limit(driver_threshold + 1)` rows
-    — callers that already ran a probe job (canonicalize piggybacks the
-    surface count on it) pass them in so no second job runs here."""
-    # single probe job: collect up to threshold+1 edges; only if the graph
-    # exceeds the threshold does the distributed fixpoint run (and the
-    # collected prefix is discarded)
-    rows = probe_rows if probe_rows is not None else (
-        edges.select("src", "dst").limit(driver_threshold + 1).collect()
-    )
-    if len(rows) <= driver_threshold:
-        return _driver_union_find(edges, rows)
+    orders of magnitude below corpus scale, so up to DRIVER_THRESHOLD
+    edges one probe job (session.collect_if_small) brings them to the
+    driver as numpy columns and union-find solves them in milliseconds —
+    ~10 distributed rounds of shuffle latency buy nothing there. Above
+    the threshold the distributed min-label fixpoint with pointer
+    jumping runs (O(log diameter) rounds)."""
+    small = collect_if_small(edges.select("src", "dst"), DRIVER_THRESHOLD)
+    if small is not None:
+        return _driver_union_find(edges.sparkSession, small["src"].to_numpy(),
+                                  small["dst"].to_numpy())
     return _distributed_cc(edges, max_iter, n_partitions)
 
 
-def _driver_union_find(edges: DataFrame, rows=None) -> DataFrame:
-    if rows is None:
-        rows = edges.select("src", "dst").collect()
-    parent: dict[int, int] = {}
+def _driver_union_find(spark, src: np.ndarray, dst: np.ndarray) -> DataFrame:
+    """Union-find over numpy edge columns. Nodes are renumbered by sorted
+    id and every root is its component's smallest index, so the root's
+    node id is the component's min node id."""
+    nodes, ends = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    if not len(nodes):
+        return spark.createDataFrame([], "node long, component long")
+    parent = list(range(len(nodes)))
 
     def find(x: int) -> int:
         r = x
-        while parent.get(r, r) != r:
+        while parent[r] != r:
             r = parent[r]
-        while parent.get(x, x) != r:
+        while parent[x] != r:
             parent[x], x = r, parent[x]
         return r
 
-    for r in rows:
-        a, b = find(int(r["src"])), find(int(r["dst"]))
+    for a, b in zip(*ends.reshape(2, -1).tolist()):
+        a, b = find(a), find(b)
         if a != b:
-            if a < b:
-                parent[b] = a
-            else:
-                parent[a] = b
-    nodes = {int(r["src"]) for r in rows} | {int(r["dst"]) for r in rows}
-    out = [(n, find(n)) for n in sorted(nodes)]
-    spark = edges.sparkSession
-    if not out:
-        return spark.createDataFrame([], "node long, component long")
-    # pandas → Arrow createDataFrame path (r6): the list-of-tuples form
-    # pickles row by row through the JVM gateway; Arrow ships the whole
-    # column batch at once (guide §6 driver-transfer note)
-    import pandas as pd
-
-    pdf = pd.DataFrame(out, columns=["node", "component"]).astype("int64")
+            parent[max(a, b)] = min(a, b)
+    comp = nodes[[find(i) for i in range(len(nodes))]]
+    # pandas → Arrow createDataFrame: the whole column batch crosses the
+    # JVM gateway at once instead of row-by-row pickling
+    pdf = pd.DataFrame({"node": nodes, "component": comp}).astype("int64")
     return spark.createDataFrame(pdf, "node long, component long")
 
 
-def _distributed_cc(edges: DataFrame, max_iter: int, n_partitions: int) -> DataFrame:
+def _distributed_cc(edges: DataFrame, max_iter: int = 20,
+                    n_partitions: int = 8) -> DataFrame:
     """edges(src long, dst long) undirected → (node long, component long)
     where component = min node id reachable. Deterministic.
 
@@ -145,8 +135,7 @@ def _distributed_cc(edges: DataFrame, max_iter: int, n_partitions: int) -> DataF
     return labels
 
 
-def canonicalize(surfaces: DataFrame, pairs: DataFrame,
-                 stats: dict | None = None) -> DataFrame:
+def canonicalize(surfaces: DataFrame, pairs: DataFrame, stats: dict) -> DataFrame:
     """surfaces(etype, surface, freq) + linked pairs → alias table
     (entity_id, canonical, etype, alias).
 
@@ -156,12 +145,14 @@ def canonicalize(surfaces: DataFrame, pairs: DataFrame,
     a component is its most frequent alias (freq desc, surface asc
     tiebreak). Singleton surfaces form their own entity.
 
-    With a `stats` dict, the probe job that sizes the CC strategy ALSO
-    counts the surface vocabulary (stats["n_surfaces"] = alias-table row
-    count — the output here is exactly one row per surfaces row), so the
-    caller's downstream broadcast-vs-shuffle decision costs no extra
-    blocking job. At local[N] the pipeline tail is bounded by serialized
-    job COUNT, not data volume (NOTES_r2), so every fused probe matters."""
+    Fills stats["n_surfaces"], the alias-table row count (the output
+    here is exactly one row per surfaces row), which the caller's
+    broadcast-vs-shuffle decision needs. Below DRIVER_THRESHOLD edges
+    the probe job that sizes the CC strategy also carries that count as
+    one extra row, so it costs no extra blocking job: at local[N] the
+    pipeline tail is bounded by serialized job COUNT, not data volume
+    (NOTES_r2). Above it the distributed fixpoint already runs many
+    jobs, and the count is one more."""
     from pyspark.sql import Window as W
 
     from ..linking.minhash_lsh import normalize_surface
@@ -180,24 +171,23 @@ def canonicalize(surfaces: DataFrame, pairs: DataFrame,
         .select("src", "dst")
         .persist()
     )
-    probe_rows = None
-    if stats is not None:
-        # one job: up to threshold+1 edges plus a 1-row surface count
-        probe = (
-            edges.select("src", "dst", F.lit(0).alias("marker"))
-            .limit(DRIVER_THRESHOLD + 1)
-            .unionByName(
-                surfaces.agg(F.count(F.lit(1)).alias("src"))
-                .select("src", F.lit(0).cast("long").alias("dst"),
-                        F.lit(1).alias("marker"))
-            )
-            .collect()
-        )
-        probe_rows = [r for r in probe if r["marker"] == 0]
-        stats["n_surfaces"] = int(
-            next(r["src"] for r in probe if r["marker"] == 1)
-        )
-    comp = connected_components(edges, probe_rows=probe_rows)
+    # one job: the edges plus a 1-row surface count, marked apart
+    probe = collect_if_small(
+        edges.withColumn("marker", F.lit(0)).unionByName(
+            surfaces.agg(F.count(F.lit(1)).alias("src"))
+            .select("src", F.lit(0).cast("long").alias("dst"), F.lit(1).alias("marker"))
+        ),
+        DRIVER_THRESHOLD + 1,
+    )
+    if probe is not None:
+        is_count = probe["marker"] == 1
+        stats["n_surfaces"] = int(probe.loc[is_count, "src"].iloc[0])
+        small = probe[~is_count]
+        comp = _driver_union_find(edges.sparkSession, small["src"].to_numpy(),
+                                  small["dst"].to_numpy())
+    else:
+        stats["n_surfaces"] = surfaces.count()
+        comp = _distributed_cc(edges)
     edges.unpersist(blocking=False)
     labeled = (
         ids.join(comp, ids.node == comp.node, "left")

@@ -9,15 +9,17 @@ the standard formulation; deterministic for a fixed iteration count.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import DRIVER_THRESHOLD
+from ..session import collect_if_small
+from . import components
 
 
 def pagerank(edges: DataFrame, damping: float = 0.85, n_iter: int = 15,
-             n_partitions: int = 8,
-             driver_threshold: int = DRIVER_THRESHOLD) -> DataFrame:
+             n_partitions: int = 8) -> DataFrame:
     """edges(src long, dst long) directed → (node long, rank double),
     ranks summing to ~1. Undirected graphs: pass both directions.
 
@@ -25,11 +27,13 @@ def pagerank(edges: DataFrame, damping: float = 0.85, n_iter: int = 15,
     components.connected_components: the graphs this engine ranks are
     vocabulary-sized (entity co-occurrence over distinct canonical
     surfaces), orders of magnitude below corpus scale. Up to
-    `driver_threshold` edges one probe job collects the edge list and
-    the power iteration runs as numpy vector ops in milliseconds —
-    n_iter distributed rounds of join+agg+checkpoint latency buy
-    nothing there (measured r6: 5.7s → ~0.5s on the 1000-node oracle
-    graph, ~8 serialized jobs per iteration eliminated). Above the
+    components.DRIVER_THRESHOLD edges one probe job
+    (session.collect_if_small) brings the edge list to the driver as
+    numpy columns and the power iteration runs as vector ops in
+    milliseconds — n_iter distributed rounds of join+agg+checkpoint
+    latency buy nothing there (measured r6: 5.7s → ~0.5s on the
+    1000-node oracle graph, ~8 serialized jobs per iteration
+    eliminated). Above the
     threshold the distributed join+aggregation loop runs unchanged.
     Both paths compute the identical recurrence
     rank = (1-d)/n + d*(inflow + dangling/n); consumers round at 1e-6
@@ -37,26 +41,22 @@ def pagerank(edges: DataFrame, damping: float = 0.85, n_iter: int = 15,
     summation-order differences exactly as it already must between
     Spark's nondeterministic shuffle-merge order and the DuckDB oracle.
     """
-    rows = edges.select("src", "dst").limit(driver_threshold + 1).collect()
-    if len(rows) <= driver_threshold:
-        return _driver_pagerank(edges.sparkSession, rows, damping, n_iter)
+    small = collect_if_small(edges.select("src", "dst"), components.DRIVER_THRESHOLD)
+    if small is not None:
+        return _driver_pagerank(edges.sparkSession, small["src"].to_numpy(),
+                                small["dst"].to_numpy(), damping, n_iter)
     return _distributed_pagerank(edges, damping, n_iter, n_partitions)
 
 
-def _driver_pagerank(spark, rows, damping: float, n_iter: int) -> DataFrame:
-    """numpy power iteration on a collected edge list — identical
+def _driver_pagerank(spark, src: np.ndarray, dst: np.ndarray, damping: float,
+                     n_iter: int) -> DataFrame:
+    """numpy power iteration on driver-side edge columns — identical
     recurrence to _distributed_pagerank, vectorized."""
-    import numpy as np
-
-    if not rows:
-        return spark.createDataFrame([], "node long, rank double")
-    src = np.array([r["src"] for r in rows], dtype=np.int64)
-    dst = np.array([r["dst"] for r in rows], dtype=np.int64)
-    nodes = np.unique(np.concatenate([src, dst]))
+    nodes, ends = np.unique(np.concatenate([src, dst]), return_inverse=True)
     n = len(nodes)
-    idx = {int(v): i for i, v in enumerate(nodes)}
-    si = np.array([idx[int(v)] for v in src], dtype=np.int64)
-    di = np.array([idx[int(v)] for v in dst], dtype=np.int64)
+    if not n:
+        return spark.createDataFrame([], "node long, rank double")
+    si, di = ends.reshape(2, -1)
     deg = np.bincount(si, minlength=n).astype(np.float64)
     w = 1.0 / deg[si]
     ranks = np.full(n, 1.0 / n, dtype=np.float64)
@@ -67,8 +67,6 @@ def _driver_pagerank(spark, rows, damping: float, n_iter: int) -> DataFrame:
         dangling = 1.0 - inflow.sum()
         ranks = base + damping * (inflow + dangling / n)
     # pandas → Arrow createDataFrame (columnar batch, no per-row pickle)
-    import pandas as pd
-
     pdf = pd.DataFrame({"node": nodes.astype("int64"), "rank": ranks})
     return spark.createDataFrame(pdf, "node long, rank double")
 

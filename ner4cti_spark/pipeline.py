@@ -74,14 +74,13 @@ def link_entities(mentions: DataFrame, cfg: PipelineConfig,
 
     The distinct-surface vocabulary is aggregated from the corpus-scale
     mention table exactly ONCE and cached; every linking stage reads the
-    cache (orders of magnitude smaller than the corpus). No blocking
-    action runs here — the caller's first action on the result (e.g.
-    entities.cache().count()) materializes the whole chain in one job,
-    and that count is exactly the alias-table row count (distinct mention
+    cache (orders of magnitude smaller than the corpus). The only
+    blocking action here is canonicalize's size probe, which also fills
+    stats["n_surfaces"]: the alias-table row count (distinct mention
     surfaces plus any hint bridge nodes — canonical forms never observed
-    verbatim), which is the right number for link_mentions' broadcast
-    decision. The old separate agg.count() probe serialized an extra
-    corpus-scale job into the pipeline tail."""
+    verbatim), the number link_mentions' broadcast decision needs. The
+    caller's first action on the result materializes the rest of the
+    chain."""
     from pyspark.sql import functions as F
 
     has_hints = "canonical_hint" in mentions.columns
@@ -122,7 +121,7 @@ def link_entities(mentions: DataFrame, cfg: PipelineConfig,
     )
     fuzzy = candidate_pairs_sql(surfaces, sim_threshold=cfg.link_threshold)
     pairs = hint_pairs.unionByName(fuzzy).dropDuplicates(["etype", "surface_a", "surface_b"])
-    return canonicalize(surfaces, pairs, stats=stats)
+    return canonicalize(surfaces, pairs, stats if stats is not None else {})
 
 
 def run_pipeline(spark: SparkSession, corpus: DataFrame,
@@ -161,10 +160,7 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
     # so NO separate entities.count() job serializes into the tail; the
     # caller's first action on triples materializes the (cached) linking
     # chain, reading the still-persisted surface aggregation.
-    n_alias_rows = stats.get("n_surfaces")
-    if n_alias_rows is None:  # defensive: canonicalize probe skipped
-        n_alias_rows = entities.count()
-    linked = graph.link_mentions(mentions, entities, alias_count=n_alias_rows)
+    linked = graph.link_mentions(mentions, entities, stats["n_surfaces"])
     triples = graph.build_triples(linked, entities)
     if out_dir is not None:
         lineage.write_checkpoint(

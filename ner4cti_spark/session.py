@@ -11,8 +11,10 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def ship_package(spark: SparkSession) -> str:
@@ -84,3 +86,42 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)
     return spark
+
+
+def collect_if_small(df: DataFrame, limit: int):
+    """`df` as a pandas frame when it has at most `limit` rows, else None.
+
+    The one size probe behind every "driver or distributed" choice: a
+    single job collects `df.limit(limit + 1)` through Arrow (columnar
+    batches, no per-row pickling), so a small input costs one job and
+    arrives ready for numpy, and a large one stops after limit + 1 rows."""
+    pdf = df.limit(limit + 1).toPandas()
+    return pdf if len(pdf) <= limit else None
+
+
+# name → (Spark appId, key, value)
+_SESSION_CACHE: dict[str, tuple[str, Any, Any]] = {}
+
+
+def session_cached(spark: SparkSession, name: str, key: Any,
+                   build: Callable[[], Any]) -> Any:
+    """One cached value per `name`, reused while the Spark app and `key`
+    match — e.g. a persisted per-corpus scan shared by every query over
+    that corpus, so repeated queries keep the persistent-RDD count flat.
+
+    A different `key` in the same app unpersists the old value (a
+    DataFrame, or the DataFrames in a dict) before `build()` runs. A new
+    app drops the old value without unpersisting: its DataFrames belong
+    to a stopped context."""
+    app = spark.sparkContext.applicationId
+    hit = _SESSION_CACHE.pop(name, None)
+    if hit is not None and hit[0] == app:
+        if hit[1] == key:
+            _SESSION_CACHE[name] = hit
+            return hit[2]
+        for df in hit[2].values() if isinstance(hit[2], dict) else [hit[2]]:
+            if isinstance(df, DataFrame):
+                df.unpersist(blocking=False)
+    value = build()
+    _SESSION_CACHE[name] = (app, key, value)
+    return value

@@ -57,6 +57,19 @@ def test_shingle_cache_evicts_on_corpus_switch(spark):
     assert _n_persistent(spark) <= base
 
 
+@pytest.mark.parametrize("cached", ["_simhash_sigs", "_ivf_embeddings"])
+def test_simhash_and_ivf_caches_evict_on_corpus_switch(spark, cached):
+    from ner4cti_spark import dataprep_queries as D
+
+    build = getattr(D, cached)
+    build(spark, SF_DIR).count()
+    base = _n_persistent(spark)
+    build(spark, SF_DIR_01).count()
+    assert _n_persistent(spark) <= base
+    build(spark, SF_DIR).count()
+    assert _n_persistent(spark) <= base
+
+
 def test_embedding_ivf_unpersists_fit_cache(spark):
     """The Lloyd fit persists the vector set for its (eager) lifetime
     and must release it before returning the search plan — repeated

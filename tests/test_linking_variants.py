@@ -87,3 +87,30 @@ def test_exact_pairs_normalized_equality(spark, alias_surfaces):
     assert ("APT 28", "APT28") in pairs
     assert ("Cobalt Strike", "CobaltStrike") in {tuple(sorted(p)) for p in pairs}
     assert all(r["jaccard"] == 1.0 for r in rows)
+
+
+def test_canonicalize_distributed_path_matches_small(spark, alias_surfaces, monkeypatch):
+    """Above DRIVER_THRESHOLD edges canonicalize takes the distributed
+    fixpoint and counts the surfaces in a separate job; the alias table
+    and stats["n_surfaces"] must equal the small (driver) path's."""
+    from ner4cti_spark.linking import components
+    from ner4cti_spark.linking.minhash_lsh import candidate_pairs_sql
+
+    pairs = candidate_pairs_sql(alias_surfaces, sim_threshold=0.5).cache()
+
+    def run():
+        stats: dict = {}
+        rows = components.canonicalize(alias_surfaces, pairs, stats).collect()
+        return {tuple(r) for r in rows}, stats["n_surfaces"]
+
+    small, n_small = run()
+    calls = []
+    real = components._distributed_cc
+    monkeypatch.setattr(components, "_distributed_cc",
+                        lambda *a, **k: calls.append(1) or real(*a, **k))
+    monkeypatch.setattr(components, "DRIVER_THRESHOLD", 2)
+    big, n_big = run()
+    assert calls, "the distributed path did not run"
+    assert small == big
+    assert n_small == n_big == alias_surfaces.count()
+    pairs.unpersist()

@@ -25,20 +25,38 @@ def numpy_pagerank(edge_list, damping=0.85, n_iter=15):
     return {v: r[idx[v]] for v in nodes}
 
 
-def test_pagerank_matches_numpy_oracle(spark):
-    edge_list = [
-        (1, 2), (2, 3), (3, 1),        # cycle
-        (4, 1), (4, 2),                # feeder
-        (5, 4),                        # chain into feeder
-        (3, 6),                        # 6 is dangling (no out-edges)
-    ]
-    edges = spark.createDataFrame(edge_list, "src long, dst long")
-    got = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=15).collect()}
-    want = numpy_pagerank(edge_list, n_iter=15)
+EDGE_LIST = [
+    (1, 2), (2, 3), (3, 1),        # cycle
+    (4, 1), (4, 2),                # feeder
+    (5, 4),                        # chain into feeder
+    (3, 6),                        # 6 is dangling (no out-edges)
+]
+
+
+def _assert_matches_oracle(ranks_df):
+    got = {r["node"]: r["rank"] for r in ranks_df.collect()}
+    want = numpy_pagerank(EDGE_LIST, n_iter=15)
     assert set(got) == set(want)
     for v in want:
         assert abs(got[v] - want[v]) < 1e-9, (v, got[v], want[v])
     assert abs(sum(got.values()) - 1.0) < 1e-6
+
+
+def test_pagerank_matches_numpy_oracle(spark):
+    edges = spark.createDataFrame(EDGE_LIST, "src long, dst long")
+    _assert_matches_oracle(pagerank(edges, n_iter=15))
+
+
+def test_pagerank_driver_and_distributed_paths_agree(spark):
+    """Both physical strategies against the oracle on one graph: the
+    size-adaptive dispatch picks the driver path here, the distributed
+    join+aggregation loop runs above components.DRIVER_THRESHOLD."""
+    from ner4cti_spark.linking.pagerank import _distributed_pagerank, _driver_pagerank
+
+    src, dst = (np.array(c, dtype=np.int64) for c in zip(*EDGE_LIST))
+    _assert_matches_oracle(_driver_pagerank(spark, src, dst, 0.85, 15))
+    edges = spark.createDataFrame(EDGE_LIST, "src long, dst long")
+    _assert_matches_oracle(_distributed_pagerank(edges, 0.85, 15, 4))
 
 
 def test_entity_pagerank_on_pipeline_triples(spark):

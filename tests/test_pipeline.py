@@ -115,7 +115,11 @@ def test_connected_components_chain_and_clique(spark):
     expected = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
     # both physical strategies must agree (size-adaptive dispatch picks
     # driver union-find here; the distributed fixpoint runs at scale)
-    for impl in (connected_components, _driver_union_find,
+    def driver(e):
+        pdf = e.toPandas()
+        return _driver_union_find(spark, pdf["src"].to_numpy(), pdf["dst"].to_numpy())
+
+    for impl in (connected_components, driver,
                  lambda e: _distributed_cc(e, max_iter=20, n_partitions=4)):
         comp = {r["node"]: r["component"] for r in impl(edges).collect()}
         assert comp == expected, impl
